@@ -60,16 +60,6 @@ def _vec_sql(v: list[float]) -> str:
     return "array(" + ",".join(f"{float(x)!r}D" for x in v) + ")"
 
 
-def _lit_vec(v: list[float]) -> F.Column:
-    """Literal double array (constant-folded by Catalyst — zero per-row
-    construction or cast cost), built as ONE parsed SQL expression
-    instead of dim F.lit()/F.array() py4j calls: constructing a 16x64
-    literal family element-wise costs ~0.5 s of py4j round trips vs
-    ~6 ms for the parse (measured; plan-BUILD time is part of every
-    bench number)."""
-    return F.expr(_vec_sql(v))
-
-
 def _dot_lit_sql(a_sql: str, v: list[float]) -> str:
     """SQL fragment: dot(a, literal vector) — the same
     zip_with/aggregate operation chain as ``_dot_raw`` (so values are
@@ -108,117 +98,6 @@ def _cos_pair(a: F.Column, b: F.Column, na: F.Column, nb: F.Column) -> F.Column:
     NULL-safe for zero vectors exactly like vectors.cosine_similarity."""
     denom = na * nb
     return F.when(denom != 0, _dot_raw(a, b) / denom)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-vectorized argmax kernels (r13, guide §4.2/§4.3 — r12 verdict #3).
-#
-# STATUS: measured REJECTION for the shipped query paths at the bench
-# scale factors — kept (unit-tested, exercised by
-# tools/r13/kernel_microbench.py) as the recorded evidence and as the
-# ready implementation for corpora where per-row kernel CPU actually
-# binds. The numbers (OPTIMIZATION_r13.md "HOF kernels" tranche):
-#
-# * In isolation the kernels WIN big and are bit-exact: 2M-row argmax
-#   micro-bench on this box — BIGINT HOF 8.54 s vs UDF 1.61 s (5.3x),
-#   DOUBLE HOF 6.48 s vs UDF 1.71 s (3.8x), 0/2M mismatches either
-#   family.
-# * Integrated into the query paths they LOSE at sf0.1 AND sf1.0:
-#   every consumer stage carries 500-20k rows per task, so the Python
-#   stage's fixed cost (worker round-trip, Arrow (de)serialization,
-#   closure fetch) exceeds the interpreted-HOF CPU it removes — A/B
-#   (3-pass member subset, same harness, this box): sf0.1 knn_ivf
-#   1.15 -> 1.56 s, kmeans_refit_eval 2.50 -> 2.95 s, semdedup_derived_k
-#   4.01 -> 3.91 s (the one ~flat member); sf1.0 totals 25.4 -> 33.7 s.
-#   Same disease as the r12 unrolled-kernel rejection, opposite
-#   boundary: the JIT limit is replaced by the JVM<->Python boundary.
-# * The crossover is row volume: at ~60k+ rows/task (micro-bench
-#   shape) the kernels win 4-5x. A 100 TB deployment whose assignment
-#   stages carry millions of rows per task would flip these call sites
-#   to the kernels — that flip is a one-line change per site, and the
-#   bit-exactness contract below is what makes it safe.
-#
-# Exactness contract (pinned by tests/test_np_kernels.py):
-# * BIGINT family (`_dkm_argmax_cid` twin): np.int64 matmul is exact —
-#   integer sums are order-independent (scores bounded ~3.5e14).
-# * DOUBLE family (`_centroid_scores_sql` twin): `_np_seq_dots`
-#   accumulates one dimension at a time (one IEEE multiply then one
-#   IEEE add per (row, centroid) step, ascending d) — op-for-op the
-#   aggregate(zip_with(...)) left fold; neither engine fuses (no FMA)
-#   or reorders, so every intermediate double is identical.
-# * Tie-break: struct-max over (score, cid) = max score, tie -> HIGHER
-#   cid. With centroids sorted by cid ascending, the reversed argmax
-#   picks the highest index among equal maxima — same rule.
-# ---------------------------------------------------------------------------
-
-
-def _np_argmax_last(scores: "np.ndarray") -> "np.ndarray":
-    """Row-wise argmax with ties -> HIGHEST index (the family's
-    struct-max convention once rows are sorted by cid ascending)."""
-    k = scores.shape[1]
-    return (k - 1) - np.argmax(scores[:, ::-1], axis=1)
-
-
-def _np_rows(series) -> "np.ndarray":
-    """Stack a pandas Series of fixed-width Arrow list rows into an
-    (n, dim) ndarray."""
-    return np.vstack(series.to_numpy())
-
-
-def _np_seq_dots(q: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
-    """(n, k) double dot scores replicating the SQL left-fold rounding
-    sequence bit-for-bit: per dimension one IEEE multiply, one IEEE add
-    (no FMA, no pairwise/blocked reordering — np.dot would use both)."""
-    acc = np.zeros((q.shape[0], c.shape[0]))
-    for d in range(q.shape[1]):
-        acc += q[:, d : d + 1] * c[None, :, d]
-    return acc
-
-
-def _nearest_centroid_vec(cents: list[list[float]]):
-    """Vectorized twin of ``array_max(_centroid_scores_sql(...)).cid``:
-    pandas UDF over the pre-cast double embedding column. Bit-exact per
-    the kernel-block contract above."""
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.array(cents, dtype=np.float64)
-
-    @pandas_udf("int")
-    def assign(s):
-        import pandas as pd
-
-        if not len(s):
-            return pd.Series([], dtype="int32")
-        idx = _np_argmax_last(_np_seq_dots(_np_rows(s), C))
-        return pd.Series(idx.astype(np.int32))
-
-    return assign
-
-
-def _dkm_argmax_vec(cent_rows: list[tuple[int, list[int]]]):
-    """Vectorized twin of ``_dkm_argmax_cid`` over a DRIVER-COLLECTED
-    centroid state (cid, cq) — the same k rows the broadcast rolled
-    state ships, captured in the UDF closure instead. Exact int64
-    matmul; ties -> higher cid via ascending-cid sort + reversed
-    argmax."""
-    from pyspark.sql.functions import pandas_udf
-
-    rows = sorted((int(c), list(v)) for c, v in cent_rows)
-    cids = np.array([c for c, _ in rows], dtype=np.int64)
-    CT = np.ascontiguousarray(
-        np.array([v for _, v in rows], dtype=np.int64).T
-    )
-
-    @pandas_udf("int")
-    def assign(s):
-        import pandas as pd
-
-        if not len(s):
-            return pd.Series([], dtype="int32")
-        idx = _np_argmax_last(_np_rows(s) @ CT)
-        return pd.Series(cids[idx].astype(np.int32))
-
-    return assign
 
 
 def hyperplanes(n_planes: int = N_PLANES, dim: int = EMBED_DIM) -> list[list[float]]:
@@ -3001,12 +2880,6 @@ NND_K = 16         # out-degree of the k-NN graph
 NND_ROUNDS = 3     # fixed descent rounds; the oracle replays the same count
 NND_SEED_CAP = 12  # per-bucket representatives seeding each node's list
 
-# r13 A/B switch (r12 verdict #5): materialize the per-round fwd+rev
-# union before the center self-join. True = one extra checkpoint job
-# per round but the reverse-cap window computes once; False = one job
-# fewer per round, window subtree cloned into both join sides.
-_NND_MATERIALIZE_B = False
-
 
 def _nnd_corpus(
     df: DataFrame,
@@ -3197,11 +3070,15 @@ def nn_descent_knn_graph(
             .where(F.col("rn") <= k)
             .select("center", "member")
         )
-        # b feeds both sides of the center join (r13 A/B switch,
-        # r12 verdict #5 — see OPTIMIZATION_r13.md)
+        # b feeds both sides of the center join un-materialized: one
+        # job fewer per round than checkpointing it, which measured
+        # faster (tools/r13/nnd_b_ab.json). The rev window subtree is
+        # cloned into both sides, so both clones must number rows the
+        # same way. They do because (src, dst) is unique in ``edges``
+        # (seed pairs are distinct, each round dedups): member is
+        # unique per center and (cos_sim desc, member) is a total
+        # order. Pinned in tests/test_nn_descent.py.
         b = fwd.unionByName(rev)
-        if _NND_MATERIALIZE_B:
-            b = materialize(b, persist_dir, f"nnd_b_{r}")
         cand = (
             b.select("center", F.col("member").alias("src"))
             .join(b.select("center", F.col("member").alias("dst")), "center")

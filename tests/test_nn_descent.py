@@ -66,6 +66,9 @@ def test_clustered_corpus_reaches_high_recall(clustered):
 def test_graph_invariants(shipped):
     g = similarity.nn_descent_knn_graph(shipped).toPandas()
     assert (g.vec_id != g.nbr_id).all(), "self-edge"
+    # each round's reverse-neighbor window relies on unique edges for a
+    # total (cos_sim desc, member) order (see nn_descent_knn_graph)
+    assert not g.duplicated(["vec_id", "nbr_id"]).any(), "duplicate edge"
     assert g.cos_sim.between(-1.0 - 1e-12, 1.0 + 1e-12).all()
     per = g.groupby("vec_id")
     assert (per.size() <= similarity.NND_K).all()

@@ -6,7 +6,7 @@ import os
 import sys
 
 _REPO_ROOT = os.path.abspath(
-    os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "..")
+    os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
 )
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
