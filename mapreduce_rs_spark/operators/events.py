@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduce_rs_spark.functions.hashing import h32, h64
+from mapreduce_rs_spark.operators.materialize import materialize
 from mapreduce_rs_spark.operators.relational import money, stable_avg, stable_sum
 
 SESSION_GAP_MIN = 30
@@ -1157,7 +1158,6 @@ THETA_RANGE = 1 << 32  # h32 values are uniform in [0, 2^32)
 def theta_daily_overlap(
     t: dict[str, DataFrame],
     k: int = THETA_K,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Theta/KMV sketch SET-EXPRESSION estimates between consecutive
     daily active-user cohorts — day-over-day audience retention as a
@@ -1187,8 +1187,8 @@ def theta_daily_overlap(
     (day, user) aggregate (partial-agg shuffle) and the per-day
     top-k window (WindowGroupLimit caps per-partition state at k before
     the exchange); both live inside materialized intermediates
-    (``materialize``: localCheckpoint, or parquet under ``persist_dir=``
-    for the executor-loss-safe path) because >= 4 downstream consumers
+    (``materialize``: localCheckpoint, or parquet under the session's
+    checkpoint dir) because >= 4 downstream consumers
     read each — without that, Catalyst re-expands the event-scale
     subtree per consumer (16 scans / 36 exchanges observed; 0 / 14
     after). Every downstream table is sketch-sized — days x k rows —
@@ -1197,8 +1197,6 @@ def theta_daily_overlap(
     + re-take k smallest), so daily sketches roll up to weekly/monthly ones
     without touching raw data.
     """
-    from mapreduce_rs_spark.operators.materialize import materialize
-
     daily = materialize(
         t["events"]
         .select(
@@ -1206,7 +1204,6 @@ def theta_daily_overlap(
             "user_id",
         )
         .distinct(),
-        persist_dir,
         "theta_daily_users",
     )
     hashed = daily.select(
@@ -1217,7 +1214,6 @@ def theta_daily_overlap(
         hashed.withColumn("rn", F.row_number().over(day_win))
         .where(F.col("rn") <= k)
         .select("day", "h"),
-        persist_dir,
         "theta_daily_sketches",
     )
     stats = sk.groupBy("day").agg(
@@ -2665,7 +2661,6 @@ def rollup_incremental_refresh(t: dict[str, DataFrame]) -> DataFrame:
             "cutoff_ts"
         )
     )
-    from mapreduce_rs_spark.operators.materialize import materialize
 
     # Three rollup legs read this — materialized once, not one scan per
     # leg (the read->=2x rule; review finding).
@@ -2676,7 +2671,6 @@ def rollup_incremental_refresh(t: dict[str, DataFrame]) -> DataFrame:
             "cents",
             (F.col("ts") < F.col("cutoff_ts")).alias("is_base"),
         ),
-        None,
         "ivm_tagged",
     )
 

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mapreduce_rs_spark.operators.materialize import materialize
+
 # ---------------------------------------------------------------------------
 # Order-independent money aggregation.
 #
@@ -1362,14 +1364,14 @@ def copurchase_pairs(tables: dict[str, DataFrame], min_orders: int = 2) -> DataF
 
     The basket table feeds three consumers (pairs, per-part
     frequencies, the order total), so it is materialized once
-    (localCheckpoint — the read>=2x rule) and read three times.
+    (the read>=2x rule) and read three times.
 
     Returns (part_a, part_b, n_ab, n_a, n_b, lift) for pairs
     co-purchased in >= min_orders orders.
     """
     from mapreduce_rs_spark.operators.graph import order_baskets
 
-    baskets = order_baskets(tables["lineitem"]).localCheckpoint(eager=True)
+    baskets = materialize(order_baskets(tables["lineitem"]), "copurchase_baskets")
     pair_expr = F.expr(
         "flatten(transform(ps, (x, i) -> transform(slice(ps, i + 2, size(ps)), "
         "y -> struct(x AS part_a, y AS part_b))))"
@@ -1536,8 +1538,6 @@ def rfm_segments(t: dict[str, DataFrame]) -> DataFrame:
     customer count + pixel-weighted total monetary — the segment-size
     table a campaign query reads.
     """
-    from mapreduce_rs_spark.operators.materialize import materialize
-
     o = t["orders"]
     per_cust = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
@@ -1555,7 +1555,6 @@ def rfm_segments(t: dict[str, DataFrame]) -> DataFrame:
             "frequency",
             "monetary",
         ),
-        None,
         "rfm_metrics",
     )
     cuts = metrics.agg(
@@ -1996,7 +1995,6 @@ _H32_RANGE = 1 << 32
 def join_size_estimate(
     t: dict[str, "DataFrame"],
     k: int = JOIN_SKETCH_K,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Sketch-based JOIN CARDINALITY estimation — the optimizer
     statistic that decides broadcast-vs-shuffle and partition counts
@@ -2024,8 +2022,6 @@ def join_size_estimate(
     eval leg is itself a distinct-key-scale join and is what this
     operator exists to avoid paying blind.
     """
-    from mapreduce_rs_spark.operators.materialize import materialize
-
     # Each frequency table feeds three consumers (its sketch, the exact
     # eval join, the key count) and each sketch feeds two (theta, the
     # sampled sum) — materialize all four or Catalyst re-runs the
@@ -2036,14 +2032,12 @@ def join_size_estimate(
         t["lineitem"]
         .groupBy(F.col("l_orderkey").alias("key"))
         .agg(F.count(F.lit(1)).cast("long").alias("f_a")),
-        persist_dir,
         "joinsize_freq_a",
     )
     fb = materialize(
         t["orders"]
         .groupBy(F.col("o_orderkey").alias("key"))
         .agg(F.count(F.lit(1)).cast("long").alias("f_b")),
-        persist_dir,
         "joinsize_freq_b",
     )
 
@@ -2056,7 +2050,6 @@ def join_size_estimate(
             )
             .orderBy("h", "key")
             .limit(k),
-            persist_dir,
             name,
         )
 
@@ -2254,9 +2247,7 @@ def target_encoding_nations(
 SKEW_HOT_FACTOR = 2  # a key is "hot" when freq · n_keys > factor · n_rows
 
 
-def key_skew_profile(
-    t: dict[str, DataFrame], persist_dir: str | None = None
-) -> DataFrame:
+def key_skew_profile(t: dict[str, DataFrame]) -> DataFrame:
     """Join-key skew diagnostics for the three workhorse fact keys —
     the statistic that decides SALTING vs AQE skew-join vs plain
     shuffle before paying for a 100 TB join. Per key: row/key counts,
@@ -2272,18 +2263,14 @@ def key_skew_profile(
 
     Scale: ONE frequency aggregate per key (the only key-scale
     shuffle, map-side partials), materialized once and consumed by the
-    1-row totals and the hot-key filter (``persist_dir=`` switches
-    localCheckpoint to durable parquet); everything downstream is
-    broadcast-sized.
+    1-row totals and the hot-key filter (operators/materialize.py);
+    everything downstream is broadcast-sized.
     """
-    from mapreduce_rs_spark.operators.materialize import materialize
-
     def profile(df: DataFrame, col: str, label: str) -> DataFrame:
         freq = materialize(
             df.groupBy(F.col(col).alias("k")).agg(
                 F.count(F.lit(1)).cast("long").alias("f")
             ),
-            persist_dir,
             f"skew_freq_{label}",
         )
         totals = freq.agg(

@@ -576,7 +576,6 @@ def embedding_near_dup(
     df: DataFrame,
     threshold: float = 0.97,
     planes: list[list[float]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, blocked by the hyperplane
     LSH bucket: the pair join is an equi-join on ``bucket``, never an
@@ -596,8 +595,7 @@ def embedding_near_dup(
     so the correctness gate exercises real selections — that
     calibration lives at the call site, not in the API default."""
     planes = planes or hyperplanes()
-    # Materialize once; the self-join would recompute 2x. persist_dir
-    # selects the durable parquet path (operators/materialize.py). The
+    # Materialize once; the self-join would recompute 2x. The
     # materialized row carries the pre-cast double embedding AND its
     # norm, so per-PAIR work in the self-join is one dot + one divide.
     bucketed = materialize(
@@ -609,7 +607,6 @@ def embedding_near_dup(
             _bucket_expr("embd", planes).alias("bucket"),
             _l2_raw(F.col("embd")).alias("nrm"),
         ),
-        persist_dir,
         "near_dup_buckets",
     )
     a, b = bucketed.alias("a"), bucketed.alias("b")
@@ -650,7 +647,6 @@ def embedding_near_dup_capped(
     threshold: float = 0.97,
     cap: int = NEARDUP_LEGACY_CAP,
     planes: list[list[float]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """``embedding_near_dup`` demoted to a bounded contract: the
     fixed-plane pair stream capped to the global top-``cap`` pairs by
@@ -662,7 +658,7 @@ def embedding_near_dup_capped(
     plane count, per-bucket rep cap, per-vector partner cap — is
     ``embedding_near_dup_derived``; this entry exists for the fixed-
     plane model's continuity evidence."""
-    pairs = embedding_near_dup(df, threshold, planes, persist_dir)
+    pairs = embedding_near_dup(df, threshold, planes)
     return pairs.orderBy(
         F.col("cos_sim").desc(), "vec_a", "vec_b"
     ).limit(cap)
@@ -671,9 +667,7 @@ def embedding_near_dup_capped(
 SEMDEDUP_TAU = 0.40
 
 
-def semdedup(
-    df: DataFrame, tau: float = SEMDEDUP_TAU, persist_dir: str | None = None
-) -> DataFrame:
+def semdedup(df: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the
     embedding space with the fitted IVF centroids, then inside each
     cluster drop every vector that has a SMALLER-id neighbor at cosine
@@ -685,9 +679,8 @@ def semdedup(
     an all-pairs product — and per-cluster work is bounded because k
     scales with the corpus (SemDeDup runs ~100k clusters at
     billion-vector scale, keeping E[cluster] ~ N/k constant). The
-    assignment table is materialized once (``persist_dir=None`` →
-    localCheckpoint; a cluster run passes ``persist_dir=`` for the
-    durable parquet path, operators/materialize.py) so the self-join
+    assignment table is materialized once (operators/materialize.py)
+    so the self-join
     doesn't recompute the k-way centroid scoring, and the final
     aggregate shuffles only
     (centroid_id, flag) pairs. The drop decision needs just EXISTS over
@@ -705,7 +698,6 @@ def semdedup(
         _ivf_assigned_scored(df, centroids()).select(
             "vec_id", "centroid_id", "embd", F.col("c_norm").alias("nrm")
         ),
-        persist_dir,
         "ivf_assign",
     )
     a, b = assigned.alias("a"), assigned.alias("b")
@@ -1668,7 +1660,6 @@ def kmeans_refit_distributed(
     df: DataFrame,
     rounds: int = KMEANS_DIST_ROUNDS,
     init: list[list[int]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Distributed coarse-quantizer refit: ``rounds`` Lloyd iterations
     of spherical k-means executed ENTIRELY as Spark aggregates — the
@@ -1716,7 +1707,7 @@ def kmeans_refit_distributed(
     the init and refit centroid (the drift the refit corrected).
     """
     init = init or kmeans_init_q()
-    q, cent = _kmeans_rounds(df, rounds, init, persist_dir)
+    q, cent = _kmeans_rounds(df, rounds, init)
     iv = F.expr(
         "CAST(element_at("
         + "array(" + ",".join(_cq_sql(c) for c in init) + ")"
@@ -1761,7 +1752,7 @@ def _rolled_state(cent: DataFrame) -> DataFrame:
     )
 
 
-def _dkm_quantize(df: DataFrame, persist_dir: str | None, tag: str) -> DataFrame:
+def _dkm_quantize(df: DataFrame, tag: str) -> DataFrame:
     """The integer-quantized corpus frame (vec_id, qv) every distributed
     k-means consumer reads — ONE definition (round(x · DRIFT_SCALE) as
     BIGINT) so fit, eval and the derived-k assignment cannot drift."""
@@ -1773,7 +1764,6 @@ def _dkm_quantize(df: DataFrame, persist_dir: str | None, tag: str) -> DataFrame
                 f"x -> CAST(round(x * {float(DRIFT_SCALE)!r}, 0) AS BIGINT))"
             ).alias("qv"),
         ),
-        persist_dir,
         tag,
     )
 
@@ -1794,7 +1784,6 @@ def _lloyd_rounds(
     q: DataFrame,
     cent: DataFrame,
     rounds: int,
-    persist_dir: str | None,
     tag: str = "dkm",
     assign: "Callable[[DataFrame, DataFrame], DataFrame] | None" = None,
 ) -> DataFrame:
@@ -1858,7 +1847,6 @@ def _lloyd_rounds(
                 ).otherwise(cq_new).alias("cq"),
                 F.coalesce(F.col("nm"), F.lit(0).cast("long")).alias("n_members"),
             ),
-            persist_dir,
             f"{tag}_c{r}",
         )
     return cent
@@ -1868,7 +1856,6 @@ def _kmeans_rounds(
     df: DataFrame,
     rounds: int,
     init: list[list[int]],
-    persist_dir: str | None,
 ) -> tuple[DataFrame, DataFrame]:
     """The Lloyd-round engine behind ``kmeans_refit_distributed`` and
     its quality eval (``kmeans_refit_eval``): returns (q, cent) — the
@@ -1886,15 +1873,14 @@ def _kmeans_rounds(
         F.col("c.cq").alias("cq"),
         F.lit(0).cast("long").alias("n_members"),
     )
-    q = _dkm_quantize(df, persist_dir, "dkm_corpus")
-    return q, _lloyd_rounds(q, cent, rounds, persist_dir)
+    q = _dkm_quantize(df, "dkm_corpus")
+    return q, _lloyd_rounds(q, cent, rounds)
 
 
 def kmeans_refit_eval(
     df: DataFrame,
     rounds: int = KMEANS_DIST_ROUNDS,
     init: list[list[int]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """The refit's QUALITY eval — the swap decision a model-maintenance
     loop makes after ``kmeans_refit_distributed`` produces a candidate
@@ -1923,7 +1909,7 @@ def kmeans_refit_eval(
     membership is the last update round's (assignment under
     C_{rounds-1}) — the off-by-one is inherent to Lloyd's."""
     init = init or kmeans_init_q()
-    q, cent = _kmeans_rounds(df, rounds, init, persist_dir)
+    q, cent = _kmeans_rounds(df, rounds, init)
     rolled = _rolled_state(cent)
     init_carr = _init_struct_arr(init)
 
@@ -2062,7 +2048,6 @@ def _sdk_blocked_assign(
 def _sdk_quantize(
     df: DataFrame,
     planes: list[list[float]],
-    persist_dir: str | None,
     name: str,
 ) -> DataFrame:
     """Quantized corpus WITH its own-bucket key (vec_id, qv, bucket),
@@ -2080,7 +2065,6 @@ def _sdk_quantize(
             "qv",
             _bucket_expr(f"CAST(qv AS {_DBL})", planes).alias("bucket"),
         ),
-        persist_dir,
         name,
     )
 
@@ -2089,7 +2073,6 @@ def _sdk_fit(
     df: DataFrame,
     rounds: int = KMEANS_DIST_ROUNDS,
     target: int = IVF_TARGET_CLUSTER,
-    persist_dir: str | None = None,
     tag: str = "sdk",
 ) -> tuple[DataFrame, DataFrame, list[list[float]]]:
     """The derived-k model fit — k = ivf_k_for(N), p = sdk_planes_for(k),
@@ -2104,7 +2087,7 @@ def _sdk_fit(
     n = df.count()
     k = ivf_k_for(n, target)
     planes = hyperplanes(sdk_planes_for(k))
-    q = _sdk_quantize(df, planes, persist_dir, f"{tag}_corpus")
+    q = _sdk_quantize(df, planes, f"{tag}_corpus")
     ss = F.expr(_QV_NORM2)
     # seed state: ONE projection over q -> TakeOrdered(k) -> k-row
     # window for cid + renormalize (bounded by construction: k <= 2^17)
@@ -2128,11 +2111,10 @@ def _sdk_fit(
             cq_seed.alias("cq"),
             F.lit(0).cast("long").alias("n_members"),
         ),
-        persist_dir,
         f"{tag}_seed",
     )
     cent = _lloyd_rounds(
-        q, cent0, rounds, persist_dir, tag=tag,
+        q, cent0, rounds, tag=tag,
         assign=lambda qq, cc: _sdk_blocked_assign(qq, cc, planes),
     )
     return q, cent, planes
@@ -2187,7 +2169,6 @@ def semdedup_derived_k(
     tau_frac: tuple[int, int] = SEMDEDUP_TAU_FRAC,
     rounds: int = KMEANS_DIST_ROUNDS,
     target: int = IVF_TARGET_CLUSTER,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """``semdedup`` with the model the SemDeDup recipe actually calls
     for (Abbas et al. 2023 run ~100k clusters at billion-vector scale):
@@ -2235,7 +2216,7 @@ def semdedup_derived_k(
     k·(p+1)-row replicated centroid frame), the (cid,pos) update
     (k x dim integers), the cid-blocked pair join (E[cluster] ~
     target), and the (cid, flag) audit aggregate."""
-    q, cent, planes = _sdk_fit(df, rounds, target, persist_dir, tag="sdk")
+    q, cent, planes = _sdk_fit(df, rounds, target, tag="sdk")
     ss = F.expr(_QV_NORM2)
     # final-model assignment of the FULL corpus (the same blocked
     # assignment the rounds use), carrying the exact squared norm the
@@ -2245,7 +2226,6 @@ def semdedup_derived_k(
         _sdk_blocked_assign(q, cent, planes).select(
             "vec_id", "qv", "cid", ss.alias("nrm2")
         ),
-        persist_dir,
         "sdk_assign",
     )
     num, den = tau_frac
@@ -2302,7 +2282,6 @@ def semdedup_ingest_audit(
     tau_frac: tuple[int, int] = SEMDEDUP_TAU_FRAC,
     rounds: int = KMEANS_DIST_ROUNDS,
     target: int = IVF_TARGET_CLUSTER,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """The streaming semdedup ingest twin's batch core as an ORACLED
     query: fit the derived-k model on the STANDING split
@@ -2328,19 +2307,18 @@ def semdedup_ingest_audit(
     standing_src = df.where(F.col("vec_id") % 10 < 8)
     ingest_src = df.where(F.col("vec_id") % 10 >= 8)
     q, cent, planes = _sdk_fit(
-        standing_src, rounds, target, persist_dir, tag="sdi"
+        standing_src, rounds, target, tag="sdi"
     )
     ss = F.expr(_QV_NORM2)
     standing = _sdk_blocked_assign(q, cent, planes).select(
         "vec_id", "qv", "cid", ss.alias("nrm2")
     )
-    qi = _sdk_quantize(ingest_src, planes, persist_dir, "sdi_ingest")
+    qi = _sdk_quantize(ingest_src, planes, "sdi_ingest")
     # materialized: read by the admission join AND the final audit
     assigned_new = materialize(
         _sdk_blocked_assign(qi, cent, planes).select(
             "vec_id", "qv", "cid", ss.alias("nrm2")
         ),
-        persist_dir,
         "sdi_assign",
     )
     decisions = _sdk_admit(assigned_new, standing, tau_frac)
@@ -2381,7 +2359,6 @@ def embedding_near_dup_derived(
     cap: int = NEARDUP_PAIR_CAP,
     target: int = NEARDUP_BUCKET_TARGET,
     rep_cap: int = NEARDUP_REP_CAP,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """``embedding_near_dup`` made production-shaped — the r10 verdict's
     one weak grade retired. Three fixes, all the tree's own conventions:
@@ -2451,7 +2428,6 @@ def embedding_near_dup_derived(
             _bucket_expr(f"CAST(qv AS {_DBL})", planes).alias("bucket"),
             F.expr(_QV_NORM2).alias("nrm2"),
         ),
-        persist_dir,
         "ndd_buckets",
     )
     wr = Window.partitionBy("bucket").orderBy(
@@ -2514,7 +2490,6 @@ def embedding_near_dup_eval(
     cap: int = NEARDUP_PAIR_CAP,
     target: int = NEARDUP_BUCKET_TARGET,
     rep_cap: int = NEARDUP_REP_CAP,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Recall harness for ``embedding_near_dup_derived`` — the family
     convention (ann_recall / lsh_dedup_eval / nn_descent_recall): every
@@ -2544,9 +2519,9 @@ def embedding_near_dup_eval(
     exact side is the brute-force pass this evaluation exists to
     amortize away, bounded by the 32-row broadcast sample exactly like
     knn_bruteforce; the intersection join is <= 32·cap rows."""
-    found = embedding_near_dup_derived(
-        df, tau_frac, cap, target, rep_cap, persist_dir
-    ).select("vec_a", "vec_b")
+    found = embedding_near_dup_derived(df, tau_frac, cap, target, rep_cap).select(
+        "vec_a", "vec_b"
+    )
     corpus = materialize(
         ensure_parallelism(df, "vec_id")
         .select(
@@ -2557,7 +2532,6 @@ def embedding_near_dup_eval(
             ).alias("qv"),
         )
         .select("vec_id", "qv", F.expr(_QV_NORM2).alias("nrm2")),
-        persist_dir,
         "nde_corpus",
     )
     # ONE projection -> TakeOrdered (the single-projection rule), then
@@ -2571,7 +2545,6 @@ def embedding_near_dup_eval(
         )
         .orderBy("qh", "vec_id")
         .limit(N_QUERIES_CAP),
-        persist_dir,
         "nde_sample",
     )
     num, den = tau_frac
@@ -2651,7 +2624,6 @@ def knn_ivf_refit(
     k: int = 10,
     rounds: int = KMEANS_DIST_ROUNDS,
     init: list[list[int]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """IVF search SERVING THE REFIT MODEL — the swap, executed: after
     ``kmeans_refit_distributed`` produces a candidate model and
@@ -2679,7 +2651,7 @@ def knn_ivf_refit(
     side is the hard-capped KMV sample; the probe is an equi-join on
     centroid_id; the top-k window partitions by q_id."""
     init = init or kmeans_init_q()
-    q, cent = _kmeans_rounds(df, rounds, init, persist_dir)
+    q, cent = _kmeans_rounds(df, rounds, init)
     rolled = _rolled_state(cent)
     return _refit_serve_topk(_refit_assign(df, rolled), df, rolled, k)
 
@@ -2782,8 +2754,6 @@ def embedding_outliers(df: DataFrame, top_k: int = OUTLIER_TOP_K) -> DataFrame:
     aggregate; TakeOrderedAndProject caps the result at top_k with
     per-partition heaps (no global sort).
     """
-    from mapreduce_rs_spark.operators.materialize import materialize
-
     # The exploded stream feeds BOTH the sums aggregate and the
     # join-back; materialized once so the scan+posexplode+quantization
     # pass isn't expanded into each consumer (the repo's read->=2x
@@ -2801,7 +2771,6 @@ def embedding_outliers(df: DataFrame, top_k: int = OUTLIER_TOP_K) -> DataFrame:
             "pos",
             F.round(F.col("x") * DRIFT_SCALE, 0).cast("long").alias("qx"),
         ),
-        None,
         "outlier_q",
     )
     sums = q.groupBy("label", "pos").agg(
@@ -2884,7 +2853,6 @@ NND_SEED_CAP = 12  # per-bucket representatives seeding each node's list
 def _nnd_corpus(
     df: DataFrame,
     planes: list[list[float]],
-    persist_dir: str | None,
 ) -> DataFrame:
     """(vec_id, embd, c_norm, bucket), materialized: read by the seed
     join and by BOTH sides of every round's scoring join (>= 2x rule)."""
@@ -2897,7 +2865,6 @@ def _nnd_corpus(
             _l2_raw(F.col("embd")).alias("c_norm"),
             _bucket_expr("embd", planes).alias("bucket"),
         ),
-        persist_dir,
         "nnd_corpus",
     )
 
@@ -2997,7 +2964,6 @@ def nn_descent_knn_graph(
     rounds: int = NND_ROUNDS,
     seed_cap: int = NND_SEED_CAP,
     planes: list[list[float]] | None = None,
-    persist_dir: str | None = None,
     corpus: DataFrame | None = None,
     reps: DataFrame | None = None,
 ) -> DataFrame:
@@ -3019,8 +2985,7 @@ def nn_descent_knn_graph(
     Returns the final graph: (vec_id, nbr_id, cos_sim, rnk) — N*k rows.
     Every join is an equi-join on vec_id / bucket / center; every window
     is bounded by construction; each round materializes one N*k edge
-    frame (``persist_dir`` selects the durable parquet path in
-    production, localCheckpoint locally — materialize.py contract).
+    frame (operators/materialize.py).
     """
     planes = planes or hyperplanes()
     # ``corpus`` lets a caller that ALSO needs the (vec_id, embd, norm,
@@ -3028,7 +2993,7 @@ def nn_descent_knn_graph(
     # copy instead of checkpointing the corpus twice (knn_bruteforce's
     # shared-sample discipline). Must have been built with the same
     # ``planes``.
-    v = corpus if corpus is not None else _nnd_corpus(df, planes, persist_dir)
+    v = corpus if corpus is not None else _nnd_corpus(df, planes)
     # ``reps`` mirrors ``corpus``: knn_graph_search materializes the
     # same (bucket, rep_id) frame for its entry beam and passes it in,
     # so the full-corpus reps window isn't computed twice per serve.
@@ -3051,7 +3016,7 @@ def nn_descent_knn_graph(
         .select("src", "dst")
     )
     edges = materialize(
-        _nnd_topk(seed_pairs, v, k), persist_dir, "nnd_edges_seed"
+        _nnd_topk(seed_pairs, v, k), "nnd_edges_seed"
     )
     for r in range(rounds):
         rev_w = Window.partitionBy("center").orderBy(
@@ -3090,7 +3055,7 @@ def nn_descent_knn_graph(
         # needs one exchange, not distinct's + the window's
         pairs = cand.unionByName(edges.select("src", "dst"))
         edges = materialize(
-            _nnd_topk(pairs, v, k, dedup=True), persist_dir, f"nnd_edges_{r}"
+            _nnd_topk(pairs, v, k, dedup=True), f"nnd_edges_{r}"
         )
     return edges.select(
         F.col("src").alias("vec_id"),
@@ -3105,7 +3070,6 @@ def nn_descent_recall(
     k: int = NND_K,
     rounds: int = NND_ROUNDS,
     seed_cap: int = NND_SEED_CAP,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Graph quality vs exact ground truth — the eval companion every
     other ANN tier already has (ann_recall): for the KMV query cap,
@@ -3121,14 +3085,14 @@ def nn_descent_recall(
     not the graph construction, which the queries' neighbors still
     need)."""
     edges = nn_descent_knn_graph(
-        df, k=k, rounds=rounds, seed_cap=seed_cap, persist_dir=persist_dir
+        df, k=k, rounds=rounds, seed_cap=seed_cap
     )
     # ONE cap-row sample, materialized, feeds all three consumers
     # (ground-truth queries, the graph-side filter, the final left
     # join) — un-materialized, each consumer cloned its own full-corpus
     # TakeOrdered scan (scan audit read 4 corpus scans; now 1 — the
     # committed tools/scan_baseline.json value).
-    q = materialize(_query_set(df), persist_dir, "nnd_qids")
+    q = materialize(_query_set(df), "nnd_qids")
     qids = q.select("q_id")
     exact = knn_bruteforce(df, k=k, queries=q).select("q_id", "vec_id")
     graph_pairs = edges.select(
@@ -3159,7 +3123,6 @@ def knn_graph_search(
     hops: int = NND_HOPS,
     rounds: int = NND_ROUNDS,
     seed_cap: int = NND_SEED_CAP,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """The SERVING path of the graph tier: answer the KMV query set by
     greedy beam search over the NN-Descent graph — build (nn_descent_
@@ -3186,18 +3149,18 @@ def knn_graph_search(
     every beam window partitions by q_id with <= beam*(k+1) rows per
     partition."""
     planes = hyperplanes()
-    v = _nnd_corpus(df, planes, persist_dir)
+    v = _nnd_corpus(df, planes)
     # The reps frame serves BOTH the build's seed and the entry beam —
     # materialized once here, threaded into the build (like corpus=v),
     # so the full-corpus reps window runs once per serve, not twice.
-    reps = materialize(_nnd_reps(v, seed_cap), persist_dir, "gs_reps")
+    reps = materialize(_nnd_reps(v, seed_cap), "gs_reps")
     # nn_descent_knn_graph already returns a checkpointed frame under a
     # narrow rename select — re-materializing it would copy N*k rows
     # for nothing (review finding); the per-hop consumers recompute
     # only the projection.
     g = nn_descent_knn_graph(
         df, rounds=rounds, seed_cap=seed_cap, planes=planes,
-        persist_dir=persist_dir, corpus=v, reps=reps,
+        corpus=v, reps=reps,
     ).select(F.col("vec_id").alias("gsrc"), F.col("nbr_id").alias("gdst"))
     # KMV query sample derived from the CHECKPOINTED v (its cast, norm
     # and bucket are the per-row values the sample needs — recomputing
@@ -3216,7 +3179,6 @@ def knn_graph_search(
         .orderBy("qh", "q_id")
         .limit(N_QUERIES_CAP)
         .select("q_id", "q_embd", "q_norm", "q_bucket"),
-        persist_dir,
         "gs_qids",
     )
     # the shared beam loop (_beam_frontier) with the serving-path
@@ -3225,7 +3187,7 @@ def knn_graph_search(
     # graph_admit_batch); the finale self-excludes because queries ARE
     # corpus members here
     frontier = _beam_frontier(
-        qf, v, reps, g, beam, hops, persist_dir, "gs",
+        qf, v, reps, g, beam, hops, "gs",
         hint_broadcast_queries=True, planes=planes,
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cs").desc(), "cand")
@@ -3260,7 +3222,6 @@ def _beam_frontier(
     ge: DataFrame,
     beam: int,
     hops: int,
-    persist_dir: str | None,
     tag: str,
     hint_broadcast_queries: bool = False,
     planes: list[list[float]] | None = None,
@@ -3327,7 +3288,7 @@ def _beam_frontier(
         .join(reps.select("bucket", F.col("rep_id").alias("cand")), "bucket")
         .select("q_id", "cand")
     )
-    frontier = materialize(scored_top(entry, beam), persist_dir, f"{tag}_f0")
+    frontier = materialize(scored_top(entry, beam), f"{tag}_f0")
     for h in range(hops):
         nxt = (
             frontier.select("q_id", "cand")
@@ -3336,7 +3297,7 @@ def _beam_frontier(
         )
         pairs = nxt.unionByName(frontier.select("q_id", "cand"))
         frontier = materialize(
-            scored_top(pairs, beam, dedup=True), persist_dir, f"{tag}_f{h + 1}"
+            scored_top(pairs, beam, dedup=True), f"{tag}_f{h + 1}"
         )
     return frontier
 
@@ -3349,7 +3310,6 @@ def graph_admit_batch(
     k: int = NND_K,
     beam: int = NND_BEAM,
     hops: int = NND_HOPS,
-    persist_dir: str | None = None,
     tag: str = "gi",
     planes: list[list[float]] | None = None,
 ) -> DataFrame:
@@ -3366,14 +3326,13 @@ def graph_admit_batch(
     the streaming parity test pins). No self-exclusion: new vectors
     are not in the standing corpus by construction."""
     frontier = _beam_frontier(
-        nq, v, reps, ge, beam, hops, persist_dir, tag, planes=planes
+        nq, v, reps, ge, beam, hops, tag, planes=planes
     )
     w = Window.partitionBy("q_id").orderBy(F.col("cs").desc(), "cand")
     return materialize(
         frontier.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= k)
         .select("q_id", "cand", "cs"),
-        persist_dir,
         f"{tag}_found",
     )
 
@@ -3386,7 +3345,6 @@ def knn_graph_ingest(
     rounds: int = NND_ROUNDS,
     seed_cap: int = NND_SEED_CAP,
     n_batches: int = NND_INGEST_BATCHES,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Graph-index maintenance under ingest — what ``ivf_index_
     maintenance`` is to the IVF tier: the standing NN-Descent graph is
@@ -3449,13 +3407,12 @@ def knn_graph_ingest(
             _l2_raw(F.col("embd")).alias("c_norm"),
             _bucket_expr("embd", planes).alias("bucket"),
         ),
-        persist_dir,
         "gi_corpus",
     )
-    reps = materialize(_nnd_reps(v, seed_cap), persist_dir, "gi_reps")
+    reps = materialize(_nnd_reps(v, seed_cap), "gi_reps")
     g = nn_descent_knn_graph(
         old, k=k, rounds=rounds, seed_cap=seed_cap, planes=planes,
-        persist_dir=persist_dir, corpus=v, reps=reps,
+        corpus=v, reps=reps,
     )
     ge = g.select(F.col("vec_id").alias("gsrc"), F.col("nbr_id").alias("gdst"))
     # standing nodes' worst edge: the insertion bar a new vector must
@@ -3474,7 +3431,6 @@ def knn_graph_ingest(
                 "batch_id"
             ),
         ),
-        persist_dir,
         "gi_new",
     )
     cv = v.select(
@@ -3483,7 +3439,7 @@ def knn_graph_ingest(
         F.col("c_norm").alias("cv_norm"),
     )
     found = graph_admit_batch(
-        nq, v, reps, ge, k=k, beam=beam, hops=hops, persist_dir=persist_dir,
+        nq, v, reps, ge, k=k, beam=beam, hops=hops,
         planes=planes,
     )
     # exact ground truth for the KMV-capped eval subset (bounded:
@@ -3496,7 +3452,6 @@ def knn_graph_ingest(
         .orderBy("qh", "q_id")
         .limit(N_QUERIES_CAP)
         .select("q_id", "q_embd", "q_norm"),
-        persist_dir,
         "gi_qcap",
     )
     xw = Window.partitionBy("q_id").orderBy(F.col("cs").desc(), "cand")
@@ -3598,7 +3553,6 @@ def semantic_decontaminate(
     tau: float = DECON_TAU,
     top_k: int = DECON_TOP_K,
     planes: list[list[float]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """Embedding-space decontamination — the SEMANTIC twin of the
     lexical ``decontaminate`` (text_analysis): a training corpus is
@@ -3631,7 +3585,7 @@ def semantic_decontaminate(
     and train branches read the ONE checkpoint.
     """
     planes = planes or hyperplanes()
-    v = _nnd_corpus(df, planes, persist_dir)
+    v = _nnd_corpus(df, planes)
     is_eval = F.col("vec_id") % 10 >= 8
     probe_arr = F.array(
         *[F.expr(f"bucket ^ {m}") for m in _probe_masks(planes)]
@@ -3679,7 +3633,6 @@ def semantic_decontaminate_fixed(
     top_k: int = DECON_TOP_K,
     eval_cap: int = DECON_EVAL_CAP,
     planes: list[list[float]] | None = None,
-    persist_dir: str | None = None,
 ) -> DataFrame:
     """``semantic_decontaminate`` under the operator's own production
     contract (r09 verdict #4): the eval side is a FIXED bounded
@@ -3702,7 +3655,7 @@ def semantic_decontaminate_fixed(
     TakeOrdered report) is the base operator's shape.
     """
     planes = planes or hyperplanes()
-    v = _nnd_corpus(df, planes, persist_dir)
+    v = _nnd_corpus(df, planes)
     is_eval = F.col("vec_id") % 10 >= 8
     # ONE projection over the checkpointed corpus -> TakeOrdered(cap):
     # the single-projection rule — stacked selects above the limit

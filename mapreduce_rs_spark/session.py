@@ -7,7 +7,9 @@ re-planning, skew-join splitting, partition coalescing), and a pinned UTC
 session timezone so timestamp semantics match the DuckDB oracle.
 
 On a real cluster the same confs apply; only ``master`` and memory sizing
-change. Nothing in the engine assumes local mode.
+change. Nothing in the engine assumes local mode. There,
+``get_spark(**{"spark.checkpoint.dir": <durable path>})`` turns on the
+executor-loss-safe materialization path (operators/materialize.py).
 """
 
 from __future__ import annotations

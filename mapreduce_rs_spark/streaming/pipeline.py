@@ -21,6 +21,7 @@ import os
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from mapreduce_rs_spark.operators.materialize import materialize
 from mapreduce_rs_spark.operators.relational import money, stable_sum
 from pyspark.sql.types import (
     ArrayType,
@@ -175,7 +176,7 @@ def run_foreach_batch_upsert(
         except Exception:  # first batch: target doesn't exist yet
             merged = incoming
         # Materialize before overwriting the directory we just read.
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_dir)
+        materialize(merged, "tumbling_upsert").write.mode("overwrite").parquet(target_dir)
 
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(input_dir)
     (
@@ -504,7 +505,7 @@ def run_streaming_neardup_ingest(
 
     def admit(batch_df, epoch_id: int) -> None:
         sess = batch_df.sparkSession
-        batch = batch_df.select("doc_id", "lang", "text").localCheckpoint(eager=True)
+        batch = materialize(batch_df.select("doc_id", "lang", "text"), "neardup_batch")
         batch_ids = batch.select("doc_id")
         try:
             store_fps = sess.read.parquet(fps_dir)
@@ -539,7 +540,7 @@ def run_streaming_neardup_ingest(
         # and the store write below reuses the same checkpointed rows
         # (recomputing signatures for the admitted subset would run the
         # shingle->md5 pipeline a second time per micro-batch)
-        batch_bands = _banded(minhash_signatures(batch)).localCheckpoint(eager=True)
+        batch_bands = materialize(_banded(minhash_signatures(batch)), "neardup_batch_bands")
         flagged = admit_batch(
             batch, corpus_fps, corpus_bands, batch_bands=batch_bands
         )
@@ -549,8 +550,8 @@ def run_streaming_neardup_ingest(
             & ~F.col("near_corpus")
             & ~F.col("near_batch")
         ).select("doc_id")
-        admitted = batch.join(admitted_ids, "doc_id", "left_semi").localCheckpoint(
-            eager=True
+        admitted = materialize(
+            batch.join(admitted_ids, "doc_id", "left_semi"), "neardup_admitted"
         )
         # append admitted docs + their admission artifacts; replays
         # append duplicate doc_id rows, which every reader (including
@@ -727,10 +728,8 @@ def build_graph_store(spark: SparkSession, corpus: DataFrame, store_dir: str) ->
     reps, and the NN-Descent edge list. In production this runs on the
     rebuild cadence ``knn_graph_ingest``'s ledger decides; the
     streaming loop between rebuilds reads these artifacts only."""
-    from mapreduce_rs_spark.operators.partitioning import ensure_parallelism
     from mapreduce_rs_spark.operators.similarity import (
-        _bucket_expr,
-        _l2_raw,
+        _nnd_corpus,
         _nnd_reps,
         hyperplanes,
         nn_descent_knn_graph,
@@ -738,17 +737,9 @@ def build_graph_store(spark: SparkSession, corpus: DataFrame, store_dir: str) ->
     )
 
     planes = hyperplanes()
-    base = ensure_parallelism(corpus, "vec_id").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embd")
-    )
-    v = base.select(
-        "vec_id",
-        "embd",
-        _l2_raw(F.col("embd")).alias("c_norm"),
-        _bucket_expr("embd", planes).alias("bucket"),
-    ).localCheckpoint(eager=True)
+    v = _nnd_corpus(corpus, planes)
     v.write.mode("overwrite").parquet(os.path.join(store_dir, "corpus"))
-    reps = _nnd_reps(v, NND_SEED_CAP).localCheckpoint(eager=True)
+    reps = materialize(_nnd_reps(v, NND_SEED_CAP), "store_reps")
     reps.write.mode("overwrite").parquet(os.path.join(store_dir, "reps"))
     nn_descent_knn_graph(corpus, planes=planes, corpus=v, reps=reps).select(
         F.col("vec_id").alias("gsrc"), F.col("nbr_id").alias("gdst")
@@ -798,15 +789,18 @@ def admitted_edges_from_store(
 
     sess = batch_df.sparkSession
     planes = hyperplanes()
-    nq = batch_df.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").cast("array<double>").alias("q_embd"),
-    ).select(
-        "q_id",
-        "q_embd",
-        _l2_raw(F.col("q_embd")).alias("q_norm"),
-        _bucket_expr("q_embd", planes).alias("q_bucket"),
-    ).localCheckpoint(eager=True)
+    nq = materialize(
+        batch_df.select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").cast("array<double>").alias("q_embd"),
+        ).select(
+            "q_id",
+            "q_embd",
+            _l2_raw(F.col("q_embd")).alias("q_norm"),
+            _bucket_expr("q_embd", planes).alias("q_bucket"),
+        ),
+        f"{tag}_queries",
+    )
     v = sess.read.parquet(os.path.join(store_dir, "corpus"))
     reps = sess.read.parquet(os.path.join(store_dir, "reps"))
     ge = sess.read.parquet(os.path.join(store_dir, "edges"))
@@ -895,7 +889,7 @@ def build_decon_store(spark: SparkSession, corpus: DataFrame, store_dir: str) ->
     )
 
     planes = hyperplanes()
-    v = _nnd_corpus(corpus, planes, None)
+    v = _nnd_corpus(corpus, planes)
     (
         v.where(F.col("vec_id") % 10 >= 8)
         .select(
@@ -1151,10 +1145,13 @@ def semdedup_admit_batch(batch_df: DataFrame, store_dir: str) -> DataFrame:
     standing = sess.read.parquet(os.path.join(store_dir, "standing"))
     k = ivf_k_for(standing.count())
     planes = hyperplanes(sdk_planes_for(k))
-    q = _sdk_quantize(batch_df, planes, None, "sds_batch")
-    assigned = _sdk_blocked_assign(q, cent, planes).select(
-        "vec_id", "qv", "cid", F.expr(_QV_NORM2).alias("nrm2")
-    ).localCheckpoint(eager=True)
+    q = _sdk_quantize(batch_df, planes, "sds_batch")
+    assigned = materialize(
+        _sdk_blocked_assign(q, cent, planes).select(
+            "vec_id", "qv", "cid", F.expr(_QV_NORM2).alias("nrm2")
+        ),
+        "sds_assigned",
+    )
     return _sdk_admit(assigned, standing)
 
 
@@ -1290,7 +1287,7 @@ def build_refit_store(
 
     rounds = KMEANS_DIST_ROUNDS if rounds is None else rounds
     init = init or kmeans_init_q()
-    _q, cent = _kmeans_rounds(corpus, rounds, init, None)
+    _q, cent = _kmeans_rounds(corpus, rounds, init)
     cent.select("cid", "cq").write.mode("overwrite").parquet(
         os.path.join(store_dir, "centroids")
     )

@@ -77,15 +77,6 @@ _SLOW_FUNCS = {
     "test_session_new_ops_partition_invariant",
     "test_sixth_session_ops_partition_invariant",
     "test_round4_ratio_signals_partition_invariant",
-    # per-operator materialize byte-identity (one mechanism, many
-    # operators; ~17 s combined): minhash_lsh_pairs + dedup_components
-    # stay fast as the two-path representatives
-    "test_semdedup_parquet_path_byte_identical",
-    "test_bfs_hops_parquet_path_byte_identical",
-    "test_cms_parquet_path_byte_identical",
-    "test_theta_daily_overlap_parquet_path_byte_identical",
-    "test_bigram_surprisal_parquet_path_byte_identical",
-    "test_join_size_estimate_parquet_path_byte_identical",
 }
 
 # Per-param slow marking for the big parametrizations: params NOT in
@@ -110,6 +101,17 @@ _RANDOM_PROBE_REPRESENTATIVES = {
         "knn_bruteforce",
         "knn_graph_ingest",
     },
+}
+
+# Per-operator durable-materialization byte-identity (one mechanism,
+# many operators): minhash_lsh_pairs + dedup_components stay fast as
+# the two-path representatives, jaccard_pairs + pagerank_trade_flows as
+# the routed former direct-checkpoint sites.
+_DURABLE_FAST = {
+    "minhash_lsh_pairs",
+    "dedup_components",
+    "jaccard_pairs",
+    "pagerank_trade_flows",
 }
 
 # Streaming twins: keep the 6-param core hash-parity sweep and ONE
@@ -155,6 +157,9 @@ def pytest_collection_modifyitems(config, items):
                 item.add_marker(slow)
         elif func in _RANDOM_PROBE_REPRESENTATIVES:
             if param not in _RANDOM_PROBE_REPRESENTATIVES[func]:
+                item.add_marker(slow)
+        elif func == "test_durable_path_byte_identical":
+            if param not in _DURABLE_FAST:
                 item.add_marker(slow)
         elif func in _SLOW_STREAMING:
             if param not in _SLOW_STREAMING[func]["keep"]:

@@ -1,140 +1,173 @@
-"""The durable-materialization contract (operators/materialize.py):
-``persist_dir=`` must produce byte-identical results to the default
-localCheckpoint path, and must actually leave the reusable parquet
-artifact on disk — the round-3 verdict's ask that "persist to parquet
-in production" be a code path, not a docstring comment."""
+"""The materialization policy (operators/materialize.py): a session
+started with ``spark.checkpoint.dir`` must write every reused
+intermediate as parquet under that directory, produce byte-identical
+results to the default localCheckpoint path, and leave the reusable
+artifacts on disk.
+
+The durable side runs in ONE subprocess per module (``python -m
+tests.test_materialize``): the checkpoint dir is read when the
+SparkContext is created, and the suite's shared session must keep the
+default path. Each operator stays its own pytest item; the subprocess
+runs only the operators whose items were selected."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import importlib
+import json
 import os
+import pickle
+import subprocess
+import sys
 
-from mapreduce_rs_spark.sources.catalog import load_table
+import pytest
 
+from mapreduce_rs_spark.sources.catalog import load_table, load_tables
 
-def _rows(df, *sort_cols):
-    return [tuple(r) for r in df.orderBy(*sort_cols).collect()]
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-
-def test_minhash_lsh_pairs_parquet_path_byte_identical(spark, sf_dir, tmp_path):
-    from mapreduce_rs_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = _rows(minhash_lsh_pairs(docs), "doc_a", "doc_b")
-    persist = str(tmp_path / "lsh")
-    durable = _rows(minhash_lsh_pairs(docs, persist_dir=persist), "doc_a", "doc_b")
-    assert durable == base
-    assert os.path.isdir(os.path.join(persist, "minhash_sigs"))
-    # The artifact is itself correct and reusable: re-reading it gives
-    # the signature table the in-session path computed.
-    sigs = spark.read.parquet(os.path.join(persist, "minhash_sigs"))
-    from mapreduce_rs_spark.operators.dedup import minhash_signatures
-
-    assert _rows(sigs, "doc_id") == _rows(minhash_signatures(docs), "doc_id")
-
-
-def test_dedup_components_parquet_path_byte_identical(spark, sf_dir, tmp_path):
-    from mapreduce_rs_spark.operators.graph import dedup_components
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = _rows(dedup_components(docs), "doc_id")
-    persist = str(tmp_path / "cc")
-    durable = _rows(dedup_components(docs, persist_dir=persist), "doc_id")
-    assert durable == base
-    # Per-round label artifacts exist (round 0 = init labels).
-    assert os.path.isdir(os.path.join(persist, "cc_labels_0"))
-    assert os.path.isdir(os.path.join(persist, "cc_edges"))
-
-
-def test_semdedup_parquet_path_byte_identical(spark, sf_dir, tmp_path):
-    from mapreduce_rs_spark.operators.similarity import semdedup
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    base = _rows(semdedup(emb), "centroid_id")
-    persist = str(tmp_path / "ivf")
-    durable = _rows(semdedup(emb, persist_dir=persist), "centroid_id")
-    assert durable == base
-    assert os.path.isdir(os.path.join(persist, "ivf_assign"))
+# operator -> (module, input, artifact names it must leave)
+_CASES = {
+    "minhash_lsh_pairs": ("dedup", "documents", ("minhash_sigs",)),
+    "dedup_components": ("graph", "documents", ("cc_labels_0", "cc_edges")),
+    "semdedup": ("similarity", "embeddings", ("ivf_assign",)),
+    "bfs_hops": ("graph", "tables", ("bfs_edges", "bfs_round_1")),
+    "cms_word_counts": ("text_analysis", "documents", ("cms_wordcounts",)),
+    "theta_daily_overlap": ("events", "tables", ("theta_daily_users", "theta_daily_sketches")),
+    "bigram_surprisal_scores": ("text_analysis", "documents", ("bigram_pair_tf", "bigram_uni")),
+    "join_size_estimate": (
+        "relational", "tables",
+        ("joinsize_freq_a", "joinsize_freq_b", "joinsize_sketch_a", "joinsize_sketch_b"),
+    ),
+    # the operators whose intermediates were direct localCheckpoints
+    "jaccard_pairs": ("dedup", "documents", ("jaccard_tokens", "jaccard_rare_tokens")),
+    "pagerank_trade_flows": ("graph", "tables", ("pr_edges", "pr_graph", "pr_ranks_1")),
+    "simhash_near_pairs": ("dedup", "documents", ("simhash_sigs",)),
+    "ngram_containment_pairs": (
+        "dedup", "documents", ("containment_shingles", "containment_rare_shingles"),
+    ),
+    "prefix_filter_jaccard_pairs": ("dedup", "documents", ("prefix_shingles", "prefix_ranked")),
+    "tfidf_top_terms": ("text_analysis", "documents", ("tfidf_counts",)),
+    "bpe_train_merges": ("text_analysis", "documents", ("bpe_vocab_1",)),
+    "curation_yield_neardup": ("curation", "documents", ("curation_kept",)),
+    "copurchase_pairs": ("relational", "tables", ("copurchase_baskets",)),
+}
 
 
-def test_bfs_hops_parquet_path_byte_identical(spark, sf_dir, tmp_path):
-    from mapreduce_rs_spark.operators.graph import bfs_hops
-    from mapreduce_rs_spark.sources.catalog import load_tables
-
-    tables = load_tables(spark, sf_dir)
-    base = _rows(bfs_hops(tables), "partkey")
-    persist = str(tmp_path / "bfs")
-    durable = _rows(bfs_hops(tables, persist_dir=persist), "partkey")
-    assert durable == base
-    assert os.path.isdir(os.path.join(persist, "bfs_edges"))
-    assert os.path.isdir(os.path.join(persist, "bfs_round_1"))
+def _rows(df):
+    return [tuple(r) for r in df.orderBy(*df.columns).collect()]
 
 
-def test_cms_parquet_path_byte_identical(spark, sf_dir, tmp_path):
-    from mapreduce_rs_spark.operators.text_analysis import cms_word_counts
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = _rows(cms_word_counts(docs), "word")
-    persist = str(tmp_path / "cms")
-    durable = _rows(cms_word_counts(docs, persist_dir=persist), "word")
-    assert durable == base
-    assert os.path.isdir(os.path.join(persist, "cms_wordcounts"))
+def _run_case(spark, sf_dir, op):
+    module, source, _ = _CASES[op]
+    fn = getattr(importlib.import_module(f"mapreduce_rs_spark.operators.{module}"), op)
+    arg = load_tables(spark, sf_dir) if source == "tables" else load_table(spark, sf_dir, source)
+    return _rows(fn(arg))
 
 
-def test_theta_daily_overlap_parquet_path_byte_identical(spark, sf_dir, tmp_path):
-    from mapreduce_rs_spark.operators.events import theta_daily_overlap
-    from mapreduce_rs_spark.sources.catalog import load_tables
+def _durable_main(sf_dir: str, ckdir: str, out_dir: str, ops: list[str]) -> None:
+    """Subprocess body: run ``ops`` on a session with a checkpoint dir,
+    pickling each operator's rows and the artifacts it left."""
+    from mapreduce_rs_spark.session import get_spark
 
-    tables = load_tables(spark, sf_dir)
-    base = _rows(theta_daily_overlap(tables), "day_a")
-    persist = str(tmp_path / "theta")
-    durable = _rows(theta_daily_overlap(tables, persist_dir=persist), "day_a")
-    assert durable == base
-    assert os.path.isdir(os.path.join(persist, "theta_daily_users"))
-    assert os.path.isdir(os.path.join(persist, "theta_daily_sketches"))
-
-
-def test_bigram_surprisal_parquet_path_byte_identical(spark, sf_dir, tmp_path):
-    from mapreduce_rs_spark.operators.text_analysis import bigram_surprisal_scores
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = _rows(bigram_surprisal_scores(docs), "doc_id")
-    persist = str(tmp_path / "bigram")
-    durable = _rows(bigram_surprisal_scores(docs, persist_dir=persist), "doc_id")
-    assert durable == base
-    assert os.path.isdir(os.path.join(persist, "bigram_pair_tf"))
-    assert os.path.isdir(os.path.join(persist, "bigram_uni"))
-
-
-def test_join_size_estimate_parquet_path_byte_identical(spark, sf_dir, tmp_path):
-    from mapreduce_rs_spark.operators.relational import join_size_estimate
-    from mapreduce_rs_spark.sources.catalog import load_tables
-
-    tables = load_tables(spark, sf_dir)
-    base = _rows(join_size_estimate(tables), "n_keys_a")
-    persist = str(tmp_path / "joinsize")
-    durable = _rows(join_size_estimate(tables, persist_dir=persist), "n_keys_a")
-    assert durable == base
-    for artifact in ("joinsize_freq_a", "joinsize_freq_b",
-                     "joinsize_sketch_a", "joinsize_sketch_b"):
-        assert os.path.isdir(os.path.join(persist, artifact))
+    spark = get_spark(
+        "tests-durable",
+        **{"spark.sql.shuffle.partitions": "8", "spark.checkpoint.dir": ckdir},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    root = spark.sparkContext.getCheckpointDir().removeprefix("file:")
+    for op in ops:
+        before = set(os.listdir(root))
+        rows = _run_case(spark, sf_dir, op)
+        made = sorted(set(os.listdir(root)) - before)
+        result = {"rows": rows, "artifacts": made}
+        if op == "minhash_lsh_pairs":
+            # the artifact is itself the reusable signature table
+            (sigs,) = [a for a in made if a.startswith("minhash_sigs-")]
+            result["sigs"] = _rows(spark.read.parquet(os.path.join(root, sigs)))
+        with open(os.path.join(out_dir, f"{op}.pkl"), "wb") as f:
+            pickle.dump(result, f)
+    spark.stop()
 
 
-def test_durable_path_byte_identical_at_sf01(spark, tmp_path):
+def _durable_run(tmp_path, sf_dir, ops):
+    ckdir, out_dir = tmp_path / "ckpt", tmp_path / "out"
+    out_dir.mkdir()
+    args = json.dumps([sf_dir, str(ckdir), str(out_dir), sorted(ops)])
+    proc = subprocess.run(
+        [sys.executable, "-m", "tests.test_materialize", args],
+        cwd=_ROOT, capture_output=True, text=True, timeout=1200,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return {op: pickle.loads((out_dir / f"{op}.pkl").read_bytes()) for op in ops}
+
+
+@pytest.fixture(scope="module")
+def durable(request, tmp_path_factory, sf_dir):
+    ops = {
+        item.callspec.params["op"]
+        for item in request.session.items
+        if getattr(item, "originalname", None) == "test_durable_path_byte_identical"
+    }
+    return _durable_run(tmp_path_factory.mktemp("durable"), sf_dir, ops)
+
+
+def _assert_artifacts(made, names):
+    for name in names:
+        assert any(a.startswith(f"{name}-") for a in made), (name, made)
+
+
+@pytest.mark.parametrize("op", sorted(_CASES))
+def test_durable_path_byte_identical(spark, sf_dir, durable, op):
+    got = durable[op]
+    assert got["rows"] == _run_case(spark, sf_dir, op)
+    _assert_artifacts(got["artifacts"], _CASES[op][2])
+    if op == "minhash_lsh_pairs":
+        from mapreduce_rs_spark.operators.dedup import minhash_signatures
+
+        docs = load_table(spark, sf_dir, "documents")
+        assert got["sigs"] == _rows(minhash_signatures(docs))
+
+
+def test_durable_path_byte_identical_at_sf01(spark, sf_dir, tmp_path):
     """The round-4 verdict's #6 ask: the durable-parquet path proven at
     BENCH scale, not just the test SF — minhash_lsh_pairs and the
     iterative CC labels at sf0.1, byte-compared against localCheckpoint.
     (The measured wall deltas live in SCALE.md round 5: +23% / +32% for
     executor-loss-safe, restartable, cross-job-shareable intermediates.)
     """
-    from mapreduce_rs_spark.operators.dedup import minhash_lsh_pairs
-    from mapreduce_rs_spark.operators.graph import dedup_components
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    ops = ["minhash_lsh_pairs", "dedup_components"]
+    durable = _durable_run(tmp_path, sf01, ops)
+    for op in ops:
+        assert durable[op]["rows"] == _run_case(spark, sf01, op)
+        _assert_artifacts(durable[op]["artifacts"], _CASES[op][2])
 
-    docs = load_table(spark, "/root/testdata/sf0.1", "documents")
-    persist = str(tmp_path / "sf01")
-    assert _rows(
-        minhash_lsh_pairs(docs, persist_dir=persist), "doc_a", "doc_b"
-    ) == _rows(minhash_lsh_pairs(docs), "doc_a", "doc_b")
-    assert _rows(
-        dedup_components(docs, persist_dir=persist), "doc_id"
-    ) == _rows(dedup_components(docs), "doc_id")
-    assert os.path.isdir(os.path.join(persist, "minhash_sigs"))
+
+def test_materialize_is_the_only_materialization_site():
+    """The policy has one owner: no operator calls ``.localCheckpoint()``
+    / ``.checkpoint()`` itself or threads a per-call ``persist_dir``."""
+    pkg = os.path.join(_ROOT, "mapreduce_rs_spark")
+    owner = os.path.join(pkg, "operators", "materialize.py")
+    found = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if path == owner:
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                found.append((path, node.lineno, node.func.attr))
+            # Name.id, arg.arg / keyword.arg, Attribute.attr
+            if "persist_dir" in (getattr(node, f, None) for f in ("id", "arg", "attr")):
+                found.append((path, node.lineno, "persist_dir"))
+    assert not found, found
+
+
+if __name__ == "__main__":
+    _durable_main(*json.loads(sys.argv[1]))
